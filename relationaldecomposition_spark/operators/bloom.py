@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.hashing import (
     H32_MOD, minhash_params, sql_affine_hash, sql_hash32)
+from ..plans import plan_size_bytes
 
 WORD_BITS = 32
 BLOOM_SEED = 7
@@ -216,9 +217,8 @@ def bloom_probe_broadcast(df: DataFrame, key_col: str, words: list[int],
 def bloom_semi_join(big: DataFrame, big_key: str, small: DataFrame,
                     small_key: str, m_bits: int | None = None, k: int = 5,
                     seed: int = BLOOM_SEED,
-                    literal_max_bits: int = BLOOM_LITERAL_MAX_BITS,
-                    arrow_probe_min_bytes: int | None =
-                    BLOOM_ARROW_PROBE_MIN_BYTES) -> DataFrame:
+                    literal_max_bits: int = BLOOM_LITERAL_MAX_BITS
+                    ) -> DataFrame:
     """Rows of `big` whose key *may* appear in `small` (no false
     negatives; deterministic false positives at ~(1-e^{-kn/m})^k). NULL
     keys never pass, matching semi-join semantics.
@@ -242,12 +242,12 @@ def bloom_semi_join(big: DataFrame, big_key: str, small: DataFrame,
     DuckDB-twin-able); larger builds switch to the broadcast-variable +
     vectorized-Arrow probe — same bitmap, same surviving rows, different
     delivery. PROBE DISPATCH (per-row cost, r15): when the PROBE side's
-    estimated scan exceeds `arrow_probe_min_bytes`, the Arrow probe is
-    used regardless of m_bits — its vectorized bit-tests are ~2x the
-    interpreted literal expression per row (see
-    BLOOM_ARROW_PROBE_MIN_BYTES), and on a 100 TB probe side the per-row
-    term is everything. Pass arrow_probe_min_bytes=None to disable the
-    probe-side gate (the pre-r15 m_bits-only dispatch). Builds so large
+    estimated scan reaches BLOOM_ARROW_PROBE_MIN_BYTES, the Arrow probe
+    is used regardless of m_bits — its vectorized bit-tests are ~2x the
+    interpreted literal expression per row, and on a 100 TB probe side
+    the per-row term is everything. An unreadable estimate counts as 0:
+    the broadcast face needs ``sparkContext``, which Spark Connect lacks,
+    so the gate stays on the literal plan. Builds so large
     that even ~10 bits/key is unaffordable should shrink to a budget
     (higher FP rate) or fall back to a shuffle semi-join."""
     if m_bits is None:
@@ -255,12 +255,9 @@ def bloom_semi_join(big: DataFrame, big_key: str, small: DataFrame,
         m_bits = max(BLOOM_MIN_BITS,
                      -(-(n * BLOOM_BITS_PER_KEY) // WORD_BITS) * WORD_BITS)
     words = bloom_build(small, small_key, m_bits, k, seed)
-    use_arrow = m_bits > literal_max_bits
-    if not use_arrow and arrow_probe_min_bytes is not None:
-        from .ivf import _plan_size_bytes
-
-        use_arrow = _plan_size_bytes(big) >= arrow_probe_min_bytes
-    if use_arrow:
+    if (m_bits > literal_max_bits
+            or plan_size_bytes(big, unknown=0)
+            >= BLOOM_ARROW_PROBE_MIN_BYTES):
         probe = bloom_probe_broadcast(big, big_key, words, k, seed)
     else:
         probe = bloom_probe_expr(big_key, words, k, seed)

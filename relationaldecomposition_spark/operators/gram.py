@@ -70,7 +70,14 @@ def resolve_pair_kernel(df, vec_col: str, kernel: str,
     identical values either way — only the speed differs). Streaming
     DataFrames cannot run the aggregate (no first() on an unbounded
     plan): they resolve straight to "gram", the kernel whose cost does
-    not grow with candidate volume."""
+    not grow with candidate volume.
+
+    The eager job stays because the driver-side size estimate
+    (plans.plan_size_bytes) cannot see array length: 8,192 64-dim float
+    vectors in a LocalRelation estimate 196,608 B — 24 B/row whatever
+    the dim — and a createDataFrame built from a Python list estimates
+    Long.MaxValue. Either would pick the wrong kernel at the 2,000,000
+    element cut (8,192 × 64 × 4 copies = 2,097,152 is "gram")."""
     if kernel != "auto":
         return kernel
     if df.isStreaming:

@@ -47,6 +47,7 @@ import math
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import sql_hash64
+from ..plans import plan_size_bytes
 
 HASH_BITS = 60
 HASH_SPACE = 1 << HASH_BITS  # portable_hash64 is uniform on [0, 2^60)
@@ -114,8 +115,9 @@ def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str,
     the input — "threshold" at or above KMV_THRESHOLD_MIN_BYTES (the
     scale regime, where the Arrow crossing dominates), "partial" below
     it (the extra pass + broadcast machinery costs more than it saves on
-    small inputs); derived/unstatable plans estimate huge, landing on
-    the scale-safe kernel. Both kernels return identical rows.
+    small inputs); derived plans, and plans whose estimate cannot be
+    read, count as huge, landing on the scale-safe kernel. Both kernels
+    return identical rows.
 
     method="threshold" (round-9 rework): KMV only ever keeps
     hashes below ~k/n * 2^60, so almost every row can be dropped AT THE
@@ -167,10 +169,9 @@ def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str,
     if method not in ("auto", "threshold", "partial"):
         raise ValueError(f"unknown kmv method: {method!r}")
     if method == "auto":
-        from .ivf import _plan_size_bytes
-        method = ("threshold"
-                  if _plan_size_bytes(prehashed if prehashed is not None
-                                      else df) >= KMV_THRESHOLD_MIN_BYTES
+        est = plan_size_bytes(prehashed if prehashed is not None else df,
+                              unknown=1 << 62)
+        method = ("threshold" if est >= KMV_THRESHOLD_MIN_BYTES
                   else "partial")
     import numpy as np
 

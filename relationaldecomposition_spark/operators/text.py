@@ -688,7 +688,7 @@ def lang_id(df: DataFrame, text_col: str, id_col: str,
     `keep` columns pass through untouched so fused pipelines
     (document_profile) carry other per-row signals alongside.
 
-    ``kernel="np"`` (batch only) swaps in the vectorized Arrow scorer
+    ``kernel="np"`` swaps in the vectorized Arrow scorer
     (np_lang_pred): the same integer scoring from the same constants —
     predictions are exactly equal (pinned on the gate corpus and the
     held-out fixture) — as a map-only scalar pandas UDF: no window
@@ -697,25 +697,25 @@ def lang_id(df: DataFrame, text_col: str, id_col: str,
     single-core). The declarative face remains the default: it is the
     DuckDB-twin-generated oracle form.
 
-    STREAMING input dispatches to the Arrow-batched py_lang_score face
-    (map-only, append-safe): per-document scoring is per-row work, but the
-    declarative formulation expresses it as a groupBy that unwatermarked
-    append streams reject. Identical semantics from the same constants —
-    the batch/stream parity test in tests/test_corpus.py cross-checks the
-    two implementations.
+    STREAMING input always takes the np face (map-only, append-safe):
+    per-document scoring is per-row work, but the declarative
+    formulation expresses it as a groupBy that unwatermarked append
+    streams reject. Identical semantics from the same constants — the
+    batch/stream parity test in tests/test_corpus.py cross-checks the two
+    implementations.
 
     ``max_chars`` scores only that many characters of the NORMALIZED
     padded text — identical prefix semantics in every kernel and in the
     DuckDB twin (sql_lang_id must be generated with the same value)."""
     keep = keep or []
-    if df.isStreaming:
+    if df.isStreaming or kernel == "np":
         from pyspark.sql.functions import pandas_udf
 
-        # round 6: the streaming face rides the vectorized batch scorer
-        # (np_lang_pred) — same map-only append-safe shape as the
-        # py_lang_score face it replaces, exact same predictions (pinned
-        # against both the python twin and the declarative path), ~200×
-        # the per-character python loop's speed
+        # round 6: the streaming face is the np face — the vectorized
+        # batch scorer (np_lang_pred), same map-only append-safe shape
+        # as the py_lang_score face it replaces, exact same predictions
+        # (pinned against both the python twin and the declarative
+        # path), ~200× the per-character python loop's speed
         @pandas_udf("string")
         def _score(texts: pd.Series) -> pd.Series:
             return pd.Series(np_lang_pred(texts.tolist(), max_chars),
@@ -723,16 +723,6 @@ def lang_id(df: DataFrame, text_col: str, id_col: str,
 
         return df.select(F.col(id_col), *[F.col(k) for k in keep],
                          _score(F.col(text_col)).alias("pred_lang"))
-    if kernel == "np":
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("string")
-        def _np_score(texts: pd.Series) -> pd.Series:
-            return pd.Series(np_lang_pred(texts.tolist(), max_chars),
-                             dtype="object")
-
-        return df.select(F.col(id_col), *[F.col(k) for k in keep],
-                         _np_score(F.col(text_col)).alias("pred_lang"))
     if kernel != "expr":
         raise ValueError(f"unknown lang_id kernel: {kernel!r}")
     # Materialize the normalized text (and its code-point array) as

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans import plan_size_bytes
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
@@ -107,21 +109,21 @@ def compact_write(df: DataFrame, path: str,
     parquet files, optionally range-clustered on `cluster_cols`.
 
     The file count comes from Catalyst's own size estimate for the plan
-    (`optimizedPlan().stats().sizeInBytes` — exact for file-source scans,
-    where it is the sum of the input file sizes), so no extra pass over
-    the data is needed. With `cluster_cols`, files are produced by
-    repartitionByRange + sortWithinPartitions: every output file covers a
-    disjoint range of the cluster key, so parquet min/max statistics prune
-    whole files on key-range predicates — the poor-man's Z-order, and the
-    right shape for the 100 TB "millions of tiny files from streaming
-    ingest" problem. Without them, round-robin repartition balances bytes.
+    (`plans.plan_size_bytes` — exact for file-source scans, where it is
+    the sum of the input file sizes), so no extra pass over the data is
+    needed; an unreadable estimate gives one file and est_bytes -1. With
+    `cluster_cols`, files are produced by repartitionByRange +
+    sortWithinPartitions: every output file covers a disjoint range of
+    the cluster key, so parquet min/max statistics prune whole files on
+    key-range predicates — the poor-man's Z-order, and the right shape
+    for the 100 TB "millions of tiny files from streaming ingest"
+    problem. Without them, round-robin repartition balances bytes.
 
     Returns {"n_files": int, "est_bytes": int}. The write itself is the
     only job; the range partitioner's sampling pass is Spark-internal.
     """
     if n_files is None:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
+        est = plan_size_bytes(df, unknown=-1)
         n_files = max(1, -(-est // target_file_bytes))
     else:
         est = -1

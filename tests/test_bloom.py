@@ -180,22 +180,25 @@ def test_dispatch_threshold_picks_broadcast_for_large_builds(spark, li,
     assert "ArrowEvalPython" in plan
 
 
-def test_probe_side_gate_picks_arrow_for_big_probe_sides(spark, li, small):
-    """r15 probe dispatch: when the PROBE side's estimated scan exceeds
-    arrow_probe_min_bytes, the Arrow probe engages even for a
+def test_probe_side_gate_picks_arrow_for_big_probe_sides(spark, li, small,
+                                                         monkeypatch):
+    """r15 probe dispatch: when the PROBE side's estimated scan reaches
+    BLOOM_ARROW_PROBE_MIN_BYTES, the Arrow probe engages even for a
     literal-sized bitmap (its vectorized bit-tests measured ~2x the
     interpreted literal expression per row at every m_bits), and the
     surviving rows stay bit-identical to the literal face."""
+    monkeypatch.setattr(bloom, "BLOOM_ARROW_PROBE_MIN_BYTES", 0)
     gated = bloom.bloom_semi_join(li, "l_orderkey", small, "o_orderkey",
-                                  m_bits=M_BITS, k=K,
-                                  arrow_probe_min_bytes=0)
+                                  m_bits=M_BITS, k=K)
     plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan
     # still map-only: the gate changes the evaluation engine, not the shape
     assert plan.count("Exchange") == 0
+    monkeypatch.setattr(bloom, "BLOOM_ARROW_PROBE_MIN_BYTES", 1 << 62)
     lit = bloom.bloom_semi_join(li, "l_orderkey", small, "o_orderkey",
-                                m_bits=M_BITS, k=K,
-                                arrow_probe_min_bytes=None)
+                                m_bits=M_BITS, k=K)
+    assert "ArrowEvalPython" not in \
+        lit._jdf.queryExecution().executedPlan().toString()
     assert sorted(r["l_orderkey"] for r in gated.select("l_orderkey")
                   .collect()) == \
         sorted(r["l_orderkey"] for r in lit.select("l_orderkey").collect())

@@ -8,6 +8,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from relationaldecomposition_spark.plans import plan_size_bytes
 from tests.conftest import load
 
 
@@ -258,8 +259,149 @@ def test_incremental_probes_broadcast_prune_the_index(spark):
     # (mapInPandas) index has no stats — Catalyst's default estimate is
     # huge, so it still prunes: the safe direction.
     small_idx = spark.createDataFrame(idx.toPandas())
-    assert ivf._plan_size_bytes(small_idx) < ivf.PRUNE_MIN_INDEX_BYTES
+    assert (plan_size_bytes(small_idx, unknown=-1)
+            < ivf.PRUNE_MIN_INDEX_BYTES)
     p3 = plan_of(ivf.semdedup_incremental(newb, small_idx, "embedding",
                                           "vec_id", cents, 0.9))
     assert not re.search(r"LeftSemi", p3), p3
-    assert ivf._plan_size_bytes(idx) >= ivf.PRUNE_MIN_INDEX_BYTES
+    assert plan_size_bytes(idx, unknown=-1) >= ivf.PRUNE_MIN_INDEX_BYTES
+
+
+class _NoStats:
+    """A DataFrame as Spark Connect hands it to a gate: every attribute
+    delegates, but there is no ``_jdf`` JVM handle, so the plan-size
+    estimate cannot be read."""
+
+    def __init__(self, df):
+        self._df = df
+
+    def __getattr__(self, name):
+        if name == "_jdf":
+            raise AttributeError("no JVM handle")
+        return getattr(self._df, name)
+
+
+@pytest.fixture(scope="module")
+def gate_inputs(spark):
+    """Small inputs for the four estimate gates: lineitem (bloom probe
+    side, kmv input, compact_write input) and a tiny IVF cell index
+    built from a pandas frame (known, small stats)."""
+    from relationaldecomposition_spark.operators import ivf
+
+    li = load(spark, "lineitem")
+    orders = (load(spark, "orders")
+              .where(F.col("o_orderpriority") == "1-URGENT")
+              .select("o_orderkey"))
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), 1.0]) for i in range(40)],
+        "vec_id bigint, embedding array<double>")
+    cents = [(c, [float(c), 1.0]) for c in range(7)]
+    idx = spark.createDataFrame(
+        ivf.ivf_cell_index(emb, "embedding", "vec_id", cents).toPandas())
+    newb = spark.createDataFrame(
+        [(100 + i, [float(i % 3), 1.0]) for i in range(6)],
+        "vec_id bigint, embedding array<double>")
+    return {"li": li, "orders": orders, "idx": idx, "newb": newb,
+            "cents": cents}
+
+
+def _bloom(big, small):
+    from relationaldecomposition_spark.operators import bloom
+
+    return bloom.bloom_semi_join(big, "l_orderkey", small, "o_orderkey",
+                                 m_bits=4096, k=5)
+
+
+def _semdedup(g, new_df, index):
+    from relationaldecomposition_spark.operators import ivf
+
+    return ivf.semdedup_incremental(new_df, index, "embedding", "vec_id",
+                                    g["cents"], 0.9)
+
+
+def _kmv(df):
+    from relationaldecomposition_spark.operators import sketches
+
+    return sketches.kmv_distinct(df, ["l_returnflag"], "l_orderkey", 64)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_gates_without_stats_take_their_safe_face(spark, gate_inputs,
+                                                  tmp_path):
+    """Under Spark Connect there is no ``_jdf``, so no plan stats: each
+    gate must land on the face its ``unknown`` names — and return the
+    same rows as the face the known estimate picks."""
+    from relationaldecomposition_spark.sources.tables import compact_write
+
+    g = gate_inputs
+    li, orders = g["li"], g["orders"]
+    # bloom: 0 -> literal probe (the broadcast face needs sparkContext)
+    blind = _bloom(_NoStats(li), _NoStats(orders))
+    p = plan_of(blind)
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
+    assert _rows(blind) == _rows(_bloom(li, orders))
+    # semdedup_incremental: huge -> prune the index with a semi-join
+    blind = _semdedup(g, _NoStats(g["newb"]), _NoStats(g["idx"]))
+    assert re.search(r"LeftSemi", plan_of(blind))
+    assert _rows(blind) == _rows(_semdedup(g, g["newb"], g["idx"]))
+    # kmv_distinct(method="auto"): huge -> the threshold plan
+    blind = _kmv(_NoStats(li))
+    p = plan_of(blind)
+    assert "MapInPandas" not in p and "BroadcastHashJoin" in p, p
+    assert _rows(blind) == _rows(_kmv(li))
+    # compact_write: -1 -> one file, est_bytes -1
+    out = str(tmp_path / "blind")
+    stats = compact_write(_NoStats(li), out, target_file_bytes=32 << 10)
+    assert stats == {"n_files": 1, "est_bytes": -1}
+    assert len(list(tmp_path.glob("blind/part-*.parquet"))) == 1
+    assert _rows(spark.read.parquet(out)) == _rows(li)
+
+
+def test_gate_thresholds_pinned_both_ways(spark, gate_inputs, monkeypatch):
+    """Each estimate gate flips exactly at its constant: at the input's
+    own estimate it takes the big-input face, one byte above it the
+    small-input face. The shipped defaults put sf0.001 lineitem on the
+    literal bloom probe and the partial kmv sketch."""
+    from relationaldecomposition_spark.operators import bloom, ivf, sketches
+
+    g = gate_inputs
+    li, orders = g["li"], g["orders"]
+
+    def arrow_probe():
+        return "ArrowEvalPython" in plan_of(_bloom(li, orders))
+
+    def pruned():
+        return bool(re.search(r"LeftSemi",
+                              plan_of(_semdedup(g, g["newb"], g["idx"]))))
+
+    def threshold_kmv():
+        return "MapInPandas" not in plan_of(_kmv(li))
+
+    gates = [(bloom, "BLOOM_ARROW_PROBE_MIN_BYTES", li, arrow_probe),
+             (ivf, "PRUNE_MIN_INDEX_BYTES", g["idx"], pruned),
+             (sketches, "KMV_THRESHOLD_MIN_BYTES", li, threshold_kmv)]
+    for mod, name, x, big_face in gates:
+        est = plan_size_bytes(x, unknown=-1)
+        assert 0 < est < getattr(mod, name), (name, est)
+        assert not big_face(), name
+        monkeypatch.setattr(mod, name, est)
+        assert big_face(), name
+        monkeypatch.setattr(mod, name, est + 1)
+        assert not big_face(), name
+
+
+def test_one_plan_size_estimate():
+    """plans.plan_size_bytes is the only reader of Catalyst's size
+    estimate: a private copy elsewhere fails here with its file name."""
+    from pathlib import Path
+
+    import relationaldecomposition_spark
+
+    root = Path(relationaldecomposition_spark.__file__).parent
+    home = root / "plans" / "__init__.py"
+    copies = sorted(str(f.relative_to(root)) for f in root.rglob("*.py")
+                    if f != home and "sizeInBytes" in f.read_text())
+    assert copies == []
